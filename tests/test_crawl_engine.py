@@ -524,3 +524,134 @@ def test_aimd_fold_cap_and_floor(spark):
     }
     assert got["all_err"] == [2000, 4000, 8000, 16000, 32000, 60000, 60000]
     assert got["healthy"] == [750, 500, 250, 100, 100, 100, 100]
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(batch_size=30, discover_links=True, max_depth=2),
+        dict(batch_size=20, host_budget=2, recrawl_after=2),
+        dict(batch_size=10, host_budget=2, host_buckets=4),
+    ],
+    ids=["links", "ttl", "host_buckets"],
+)
+def test_pending_frame_equals_exact_recompute(
+    spark, tmp_path, corpus_frames, monkeypatch, kw
+):
+    """The engine advances its pending set round by round instead of
+    re-deriving it from the committed history; at every round it must
+    still equal the exact enqueued_all(arrival <= r) ⟕anti
+    processed_live(r) recomputed from the committed snapshots, and keep
+    a bounded partition count."""
+    from web_scraper_v1_spark.operators.frontier import prepare_seeds
+
+    seeds_df, pages_df, robots_df = corpus_frames
+    pending_at: dict[int, list] = {}
+    parallelism = spark.sparkContext.defaultParallelism
+    real = CrawlEngine._run_round
+
+    def spy(self, r, seq_base, pending, *a, **k):
+        pending_at[r] = sorted(
+            tuple(x) for x in pending.select("url_hash", "url").collect()
+        )
+        # unions of each round's discoveries must not pile up partitions
+        assert pending.rdd.getNumPartitions() <= parallelism
+        return real(self, r, seq_base, pending, *a, **k)
+
+    monkeypatch.setattr(CrawlEngine, "_run_round", spy)
+    eng = CrawlEngine(spark, str(tmp_path / "pend"), salt_buckets=4, **kw)
+    eng.run(seeds_df, pages_df, robots=robots_df, max_rounds=5)
+    assert len(pending_at) >= 3
+
+    cols = ["url_hash", "canonical_url", "arrival_round"]
+    enqueued = [
+        tuple(x)
+        for x in prepare_seeds(seeds_df, kw["batch_size"])
+        .select(*cols)
+        .unionByName(eng.frontier().select(*cols))
+        .collect()
+    ]
+    processed = [
+        tuple(x)
+        for x in eng.processed().select("url_hash", "url", "round").collect()
+    ]
+    ttl = kw.get("recrawl_after")
+    for r, got in pending_at.items():
+        live = {
+            (h, u)
+            for h, u, pr in processed
+            if pr < r and (ttl is None or pr > r - ttl)
+        }
+        want = sorted(
+            (h, u) for h, u, arr in enqueued if arr <= r and (h, u) not in live
+        )
+        assert got == want, f"round {r}"
+
+
+@pytest.mark.parametrize("compact", [False, True], ids=["plain", "compacted"])
+def test_resume_under_ttl_matches_simulator(
+    spark, tmp_path, corpus_frames, py_fixtures, compact
+):
+    """Stop a recrawl_after=2 crawl after 3 rounds and reopen it: rows the
+    TTL expires exactly at the start round are already pending from the
+    resume-boundary rebuild and must not be re-admitted a second time,
+    and later rounds re-admit from each round's own processed snapshot
+    (read back from the compacted table once compaction folded it)."""
+    from web_scraper_v1_spark.plans.crawl import PROCESSED_SCHEMA
+    from web_scraper_v1_spark.sources.snapshots import SnapshotStore
+
+    seeds_df, pages_df, robots_df = corpus_frames
+    seeds, pages, robots = py_fixtures
+    kw = dict(batch_size=20, host_budget=2, salt_buckets=4, recrawl_after=2)
+    run = str(tmp_path / "ttl_resume")
+    CrawlEngine(spark, run, **kw).run(
+        seeds_df, pages_df, robots=robots_df, max_rounds=3
+    )
+    if compact:
+        SnapshotStore(run).compact(spark, "processed", PROCESSED_SCHEMA)
+    resumed = CrawlEngine(spark, run, **kw)
+    stats = resumed.run(seeds_df, pages_df, robots=robots_df, max_rounds=8)
+    assert stats[0].round == 3
+    sim = fx.simulate_crawl(
+        seeds, pages, batch_size=20, host_budget=2, robots=robots,
+        recrawl_after=2, max_rounds=8,
+    )
+    refetched = [
+        t for t in sim.trace if t["round"] >= 3 and t["outcome"] == "fetched"
+    ]
+    assert refetched, "horizon too short to exercise the TTL re-admission"
+    _assert_trace_equal(_trace_df_to_rows(resumed.trace()), sim.trace)
+
+
+def test_bloom_built_only_at_resume_boundary(
+    spark, tmp_path, corpus_frames, monkeypatch
+):
+    """Per-round work must not scale with the crawl history: the sharded
+    Bloom is never built on a fresh run, built at most once when a run
+    resumes, and never updated round by round."""
+    from web_scraper_v1_spark.operators import seen
+
+    calls = {"build": 0, "add": 0}
+    real_build, real_add = seen.build_sharded_bits, seen.SeenSet.add
+
+    def build(*a, **k):
+        calls["build"] += 1
+        return real_build(*a, **k)
+
+    def add(self, *a, **k):
+        calls["add"] += 1
+        return real_add(self, *a, **k)
+
+    monkeypatch.setattr(seen, "build_sharded_bits", build)
+    monkeypatch.setattr(seen.SeenSet, "add", add)
+    seeds_df, pages_df, _ = corpus_frames
+    run = str(tmp_path / "bloom_boundary")
+    fresh = CrawlEngine(spark, run, batch_size=5).run(
+        seeds_df, pages_df, max_rounds=3
+    )
+    assert len(fresh) == 3 and calls == {"build": 0, "add": 0}
+    resumed = CrawlEngine(spark, run, batch_size=5).run(
+        seeds_df, pages_df, max_rounds=6
+    )
+    assert len(resumed) == 3
+    assert calls["build"] <= 1 and calls["add"] == 0

@@ -372,6 +372,7 @@ def simulate_crawl(
     round_duration_s: float | None = None,
     discover_links: bool = False,
     max_depth: int | None = None,
+    recrawl_after: int | None = None,
 ) -> CrawlSim:
     """Golden-trace simulator. ``pages`` rows need ``url`` and ``text``
     (text None => malformed => parse error => retried then dropped, because
@@ -393,6 +394,11 @@ def simulate_crawl(
     for round r+1 at priority 0 with depth = parent depth + 1, skipping
     already-enqueued canonical URLs; ``max_depth`` drops deeper links.
     Enqueue order follows the round's execution (trace) order.
+
+    ``recrawl_after``: TTL recrawl (in_memory.go:51-61) — a task finalized
+    in round r (fetched, dropped or robots-blocked) is pending again at
+    round r + recrawl_after with its original priority and enqueue index;
+    the crawl then runs until ``max_rounds``, the horizon.
     """
     page_ok: dict[str, bool] = {
         canonicalize_url(p["url"]): p["text"] is not None for p in pages
@@ -438,24 +444,31 @@ def simulate_crawl(
     next_idx = len(seeds)
     max_arrival = max(queue_per_round) if queue_per_round else -1
     deferred: list[tuple[int, int, str]] = []
+    expiring: dict[int, list[tuple[int, int, str]]] = defaultdict(list)
     seq = 0
     r = 0
-    while (r <= max_arrival or deferred) and r < max_rounds:
-        tasks = sorted(deferred + queue_per_round.get(r, []))
+    while (r <= max_arrival or deferred or expiring) and r < max_rounds:
+        tasks = sorted(
+            deferred + queue_per_round.get(r, []) + expiring.pop(r, [])
+        )
         deferred = []
         host_count: dict[str, int] = defaultdict(int)
         for prio, idx, cu in tasks:
             host = host_of(cu)
-            if robots_disallowed(cu, robots_map):
+            blocked = robots_disallowed(cu, robots_map)
+            budget = effective_budget(host)
+            over = budget is not None and host_count[host] >= budget
+            if over and not blocked:
+                deferred.append((prio, idx, cu))
+                continue
+            if recrawl_after is not None:  # finalized this round
+                expiring[r + recrawl_after].append((prio, idx, cu))
+            if blocked:
                 sim.trace.append(
                     dict(seq=seq, round=r, identity_epoch=r, url=cu, host=host,
                          attempt=1, outcome=OUTCOME_ROBOTS)
                 )
                 seq += 1
-                continue
-            budget = effective_budget(host)
-            if budget is not None and host_count[host] >= budget:
-                deferred.append((prio, idx, cu))
                 continue
             host_count[host] += 1
             ok = page_ok.get(cu)

@@ -33,6 +33,11 @@ Design for 10^10 URLs:
   "bloom/cuckoo" deletable-filter requirement — see the SeenSet docstring):
   the live window spans <= 2 generation bitmaps, older generations are
   dropped whole, so fpp stays bounded under recrawl churn.
+
+The crawl engine (plans/crawl.py) consults the set once per run, at the
+resume boundary: ``load`` + ``filter_new`` build its unprocessed set, which
+it then advances by each round's own keys. It never calls ``add`` or
+``expire`` per round; those serve callers that keep one set across batches.
 """
 
 from __future__ import annotations
@@ -522,8 +527,9 @@ def _contains_col_multi(
 
 
 class SeenSet:
-    """Exact membership (snapshot table) + incremental sharded-Bloom
-    prefilter.
+    """Exact membership (snapshot table) + sharded-Bloom prefilter,
+    built distributed by ``load`` and optionally grown batch by batch
+    with ``add``.
 
     ``filter_new(candidates)`` returns candidates not present in the set:
     bloom-miss rows pass through without touching the join; bloom-hit rows

@@ -2,11 +2,16 @@
 job pipeline — the declarative replacement for the reference's transmitter
 loop (/root/reference/cmd/transmitter/main.go:173-218):
 
-    frontier pending  (seeds ∪ discovered, ⟕anti processed,
-                       sharded-Bloom-prefiltered)
+    unprocessed set   (seeds ∪ discovered ⟕anti live processed) — built
+                      ONCE per run() at the resume boundary (sharded-Bloom
+                      prefilter + exact anti-join against the committed
+                      history), then held as a localCheckpoint'ed frame
+                      and advanced by each round's own keys only
+      → pending = unprocessed filtered to arrival_round <= r
       → robots broadcast-join (disallow prefixes + crawl_delay_s)
       → per-host window top-k ordered by (priority, queue_seq), budget =
-        min(host_budget, crawl-delay token budget), salted vs skew
+        min(host_budget, crawl-delay token budget), salted vs skew —
+        cached ONCE; selected / deferred / blocked rows all read it
       → "fetch" = join against the page corpus (O7: the sandbox fetch is a
          join; a live fetch would be pooled HTTP in mapInPandas)
       → vectorized extraction UDF (O8, byte-identical)
@@ -16,6 +21,14 @@ loop (/root/reference/cmd/transmitter/main.go:173-218):
          failures re-emit retry_limit attempt rows, exhausted -> dropped)
       → append trace / seen / results / processed / frontier snapshots
         + lineage (one accounting aggregation per round)
+      → advance the unprocessed set: ⟕anti the round's processed keys,
+        ∪ the round's discoveries, re-checkpoint (under a recrawl TTL,
+        the rows that round r - recrawl_after processed re-enter it at
+        round r, read from that round's snapshot alone)
+
+So a round costs O(wave + pending), not O(crawl history): no per-round
+Bloom upkeep and no per-round anti-join against every committed
+``processed`` snapshot.
 
 Batch barriers (queue.go:64-71 / worker_manager.go:131-138) become Spark
 action boundaries: one committed round == one drained batch. The identity
@@ -170,11 +183,9 @@ class CrawlEngine:
         # TTL semantics (in_memory.go:51-61): a processed URL older than
         # ``recrawl_after`` rounds expires from the live seen view, so it
         # re-enters pending and is refetched — the engine's recrawl policy.
-        # The Bloom rotates per-window GENERATIONS under this policy
-        # (operators/seen.py): expired rounds' bits are dropped with their
-        # generation, so the prefilter's fpp stays bounded over an
-        # arbitrarily long recrawl horizon; exactness is preserved by the
-        # exact join against the TTL-filtered live set either way.
+        # Within a run the expiry is incremental (round r re-admits the
+        # rows round r - recrawl_after processed); at the resume boundary
+        # the exact join runs against the TTL-filtered live set.
         self.recrawl_after = recrawl_after
         # North-rule crawl-delay token buckets: when set, each host's
         # per-round budget is max(1, floor(round_duration_s /
@@ -232,7 +243,11 @@ class CrawlEngine:
         # way a missing/failed row (join miss or status != 200,
         # job_processor.go:130-132) retries then drops identically.
         self.fetcher = fetcher
-        self._live_fetched: DataFrame | None = None  # per-round, see _wave_join
+        # the round's persisted live fetch, released by _run_round
+        self._live_fetched: DataFrame | None = None
+        # run-scoped: enqueued ⟕anti live processed, checkpointed (see run)
+        self._unprocessed: DataFrame | None = None
+        # consulted once per run(), at the resume boundary
         self.processed_set = SeenSet(
             spark,
             n_bits=bloom_bits,
@@ -323,6 +338,52 @@ class CrawlEngine:
             df = df.filter(F.col("round") > r - self.recrawl_after)
         return df.select("url_hash", "url")
 
+    def _enqueued_all(self, prepared: DataFrame) -> DataFrame:
+        if not self.discover_links:
+            return prepared
+        return prepared.unionByName(self.frontier())
+
+    def _set_unprocessed(self, df: DataFrame) -> None:
+        """Checkpoint ``df`` as the new unprocessed set (eager, so the
+        previous checkpoint it may read from can be released at once).
+        Each round unions its discoveries in, and a union's partitions are
+        the sum of its inputs'; the narrow coalesce keeps the count from
+        growing with the number of rounds."""
+        old = self._unprocessed
+        self._unprocessed = df.coalesce(
+            self.spark.sparkContext.defaultParallelism
+        ).localCheckpoint(eager=True)
+        if old is not None:
+            _release_checkpoint(old)
+
+    def _readmit_expired(self, enqueued_all: DataFrame, r: int) -> None:
+        """TTL expiry, incrementally: the rows round ``r - recrawl_after``
+        processed leave the live seen view at round ``r`` (in_memory.go
+        :51-61), so they re-enter the unprocessed set. They are read from
+        that round's snapshot alone, or from the compacted table once
+        compaction has folded the snapshot away."""
+        k = r - self.recrawl_after
+        schema = (
+            self._bucketed_schema(PROCESSED_SCHEMA)
+            if self.host_buckets
+            else PROCESSED_SCHEMA
+        )
+        try:
+            expired = self.store.read_round(self.spark, "processed", schema, k)
+        except ValueError:
+            expired = self.processed().filter(F.col("round") == F.lit(k))
+        if expired is None:
+            return
+        keys = expired.select(
+            "url_hash", F.col("url").alias("canonical_url")
+        )
+        back = enqueued_all.join(
+            F.broadcast(keys) if self.broadcast_wave else keys,
+            ["url_hash", "canonical_url"],
+            "left_semi",
+        ).withColumn("url", F.col("canonical_url"))
+        self._set_unprocessed(self._unprocessed.unionByName(back))
+
     # -- run ---------------------------------------------------------------
     def run(
         self,
@@ -338,74 +399,80 @@ class CrawlEngine:
             .select(*FRONTIER_COLS)
             .cache()
         )
-        max_arrival = (
-            prepared.agg(F.max("arrival_round")).collect()[0][0] or 0
-        )
-        # the fetch universe, canonical-keyed; urls are unique by corpus
-        # construction (one row per page). With a live fetcher the corpus
-        # is the network — pages is unused.
-        pages_prepared = None
-        if pages is not None:
-            pages_prepared = pages.select(
-                U.canonicalize(F.col("url")).alias("canonical_url"),
-                F.col("html"),
-                F.octet_length(F.col("html")).alias("page_bytes"),
+        try:
+            max_arrival = (
+                prepared.agg(F.max("arrival_round")).collect()[0][0] or 0
+            )
+            # the fetch universe, canonical-keyed; urls are unique by corpus
+            # construction (one row per page). With a live fetcher the corpus
+            # is the network — pages is unused.
+            pages_prepared = None
+            if pages is not None:
+                pages_prepared = pages.select(
+                    U.canonicalize(F.col("url")).alias("canonical_url"),
+                    F.col("html"),
+                    F.octet_length(F.col("html")).alias("page_bytes"),
+                )
+
+            next_round, next_seq, next_queue_seq = self._load_state()
+            if next_queue_seq is None:
+                # enqueue counter starts after the raw seed ordinals (dup seeds
+                # consume ordinals too — the simulator's enumerate order)
+                next_queue_seq = seeds.count() if self.discover_links else 0
+            if self.discover_links and next_round > 0:
+                m = self.frontier().agg(F.max("arrival_round")).collect()[0][0]
+                if m is not None:
+                    max_arrival = max(max_arrival, m)
+            # the resume boundary: the only place the committed history is
+            # read whole — Bloom-prefiltered exact anti-join of everything
+            # enqueued against the live processed set (rows a TTL expired by
+            # next_round are already back in the result)
+            self.processed_set.load(
+                self._processed_live(next_round), round_id=next_round
+            )
+            self._set_unprocessed(
+                self.processed_set.filter_new(
+                    self._enqueued_all(prepared).withColumn(
+                        "url", F.col("canonical_url")
+                    )
+                )
             )
 
-        next_round, next_seq, next_queue_seq = self._load_state()
-        if next_queue_seq is None:
-            # enqueue counter starts after the raw seed ordinals (dup seeds
-            # consume ordinals too — the simulator's enumerate order)
-            next_queue_seq = seeds.count() if self.discover_links else 0
-        if self.discover_links and next_round > 0:
-            m = self.frontier().agg(F.max("arrival_round")).collect()[0][0]
-            if m is not None:
-                max_arrival = max(max_arrival, m)
-        self.processed_set.load(
-            self._processed_live(next_round), round_id=next_round
-        )
-
-        stats: list[RoundStats] = []
-        r = next_round
-        while r < max_rounds:
-            if r != next_round:
-                # refresh the exact seen side for THIS round from committed
-                # snapshots (keeps the logical plan flat across rounds, and
-                # applies TTL expiry even across empty rounds); the bloom is
-                # maintained incrementally inside _run_round, and expired
-                # generations are dropped here (deletable-filter path)
-                self.processed_set.set_exact(self._processed_live(r))
-                self.processed_set.expire(r)
-            enqueued_all = prepared
-            if self.discover_links:
-                enqueued_all = prepared.unionByName(self.frontier())
-            pending = self.processed_set.filter_new(
-                enqueued_all.filter(
+            stats: list[RoundStats] = []
+            r = next_round
+            while r < max_rounds:
+                enqueued_all = self._enqueued_all(prepared)
+                if self.recrawl_after is not None and r != next_round:
+                    self._readmit_expired(enqueued_all, r)
+                pending = self._unprocessed.filter(
                     F.col("arrival_round") <= F.lit(r)
-                ).withColumn("url", F.col("canonical_url"))
-            )
-            st = self._run_round(
-                r, next_seq, pending, pages_prepared, robots,
-                enqueued_all=enqueued_all, next_queue_seq=next_queue_seq,
-            )
-            if st is None:
-                if r > max_arrival and self.recrawl_after is None:
-                    break
-                # empty round before all seeds have arrived (or between a
-                # fetch and its TTL expiry under a recrawl policy): commit
-                # nothing, advance; with recrawl_after set, max_rounds is
-                # the crawl horizon (matches the simulator's empty-batch
-                # no-op)
+                )
+                st = self._run_round(
+                    r, next_seq, pending, pages_prepared, robots,
+                    enqueued_all=enqueued_all, next_queue_seq=next_queue_seq,
+                )
+                if st is None:
+                    if r > max_arrival and self.recrawl_after is None:
+                        break
+                    # empty round before all seeds have arrived (or between a
+                    # fetch and its TTL expiry under a recrawl policy): commit
+                    # nothing, advance; with recrawl_after set, max_rounds is
+                    # the crawl horizon (matches the simulator's empty-batch
+                    # no-op)
+                    r += 1
+                    continue
+                stats.append(st)
+                next_seq = st.seq_end + 1
+                next_queue_seq += st.discovered
+                if st.discovered:
+                    max_arrival = max(max_arrival, r + 1)
                 r += 1
-                continue
-            stats.append(st)
-            next_seq = st.seq_end + 1
-            next_queue_seq += st.discovered
-            if st.discovered:
-                max_arrival = max(max_arrival, r + 1)
-            r += 1
-        prepared.unpersist()
-        return stats
+            return stats
+        finally:
+            prepared.unpersist()
+            if self._unprocessed is not None:
+                _release_checkpoint(self._unprocessed)
+                self._unprocessed = None
 
     def _wave_join(
         self, pages_prepared: DataFrame, selected: DataFrame
@@ -418,11 +485,6 @@ class CrawlEngine:
         failure modes (the reference logs the error class,
         job_processor.go:126-132); None in corpus mode, where a miss has
         exactly one cause (absent from the corpus)."""
-        # a prior round that raised after its fetch persisted (fetch/parse/
-        # commit error) never reached its release site — drop the stranded
-        # frame before overwriting the reference, or it leaks one persisted
-        # DataFrame per failed round
-        self._release_live_fetched()
         wave = F.broadcast(selected) if self.broadcast_wave else selected
         if self.fetcher is not None:
             # live mode: fetch the wave over the network, keep the 200s as
@@ -462,6 +524,38 @@ class CrawlEngine:
         enqueued_all: DataFrame | None = None,
         next_queue_seq: int = 0,
     ) -> RoundStats | None:
+        """Run round ``r`` over ``pending``; None when it has no tasks.
+        Every round-scoped cache is released on every exit path — the
+        empty-round return and a raise included."""
+        cached: list[DataFrame] = []
+        try:
+            return self._round(
+                r, seq_base, pending, pages_prepared, robots,
+                enqueued_all, next_queue_seq, cached,
+            )
+        finally:
+            for df in cached:
+                df.unpersist()
+            if self._live_fetched is not None:
+                self._live_fetched.unpersist()
+                self._live_fetched = None
+            ordering.release_cached()
+
+    def _round(
+        self,
+        r: int,
+        seq_base: int,
+        pending: DataFrame,
+        pages_prepared: DataFrame,
+        robots: DataFrame | None,
+        enqueued_all: DataFrame | None,
+        next_queue_seq: int,
+        cached: list[DataFrame],
+    ) -> RoundStats | None:
+        def keep(df: DataFrame) -> DataFrame:
+            cached.append(df.cache())
+            return cached[-1]
+
         t0 = time.monotonic()
         checked = apply_robots(pending, robots)
         budget_col = None
@@ -489,9 +583,21 @@ class CrawlEngine:
             salt_buckets=self.salt_buckets,
             budget_col=budget_col,
         )
-        selected = ranked.filter(F.col("selected")).drop("selected").cache()
-        deferred_rows = ranked.filter(~F.col("selected"))
-        blocked = checked.filter(F.col("robots_blocked"))
+        # ONE materialization of the round's selection: the wave, the
+        # deferred rows and the robots-blocked rows are all read from this
+        # cache, so robots and the top-k windows run once per round
+        selection = keep(
+            ranked.unionByName(
+                checked.filter(F.col("robots_blocked")).withColumn(
+                    "selected", F.lit(False)
+                )
+            )
+        )
+        selected = selection.filter(F.col("selected")).drop("selected")
+        deferred_rows = selection.filter(
+            ~F.col("selected") & ~F.col("robots_blocked")
+        )
+        blocked = selection.filter(F.col("robots_blocked"))
 
         # -- fetch = join wave against the corpus. When a host budget
         # provably bounds the wave (self.broadcast_wave), broadcast it so
@@ -512,7 +618,7 @@ class CrawlEngine:
             # stage off the scan. (The shuffle-join path already has an
             # exchange here; the live-fetch path never scans parquet.)
             hits = hits.repartition("canonical_url")
-        parsed = hits.withColumn(
+        parsed = keep(hits.withColumn(
             "r", extract_receiver_response(F.col("html"))
         ).select(
             "queue_seq",
@@ -536,7 +642,7 @@ class CrawlEngine:
             F.col("r.ip_address").alias("ip_address"),
             F.col("r.forwarded_host").alias("forwarded_host"),
             F.col("r.parse_error").alias("parse_error"),
-        ).cache()
+        ))
         hit_keys = parsed.select("canonical_url")
         misses = selected.join(
             F.broadcast(hit_keys) if self.broadcast_wave else hit_keys,
@@ -625,7 +731,7 @@ class CrawlEngine:
             F.lit(None).cast("long").alias("page_bytes"),
             F.lit(None).cast("string").alias("error_kind"),
         )
-        task_rows = fetched_rows.unionByName(blocked_rows).cache()
+        task_rows = keep(fetched_rows.unionByName(blocked_rows))
 
         # -- ONE accounting aggregation per round: outcome counts, attempt
         # and byte sums, per-partition histogram, and the deferred count
@@ -680,10 +786,6 @@ class CrawlEngine:
         n_blocked = by_kind.get("blocked", 0)
         n_tasks = n_fetched + n_dropped + n_blocked
         if n_tasks == 0:
-            selected.unpersist()
-            parsed.unpersist()
-            task_rows.unpersist()
-            self._release_live_fetched()
             return None
 
         # -- global sequential trace ((priority, queue) order): each task
@@ -802,7 +904,7 @@ class CrawlEngine:
                 F.lit(1),
                 "_rank",
             )
-            frontier_add = assigned.select(
+            frontier_add = keep(assigned.select(
                 (F.lit(next_queue_seq) + F.col("_rank"))
                 .cast("long")
                 .alias("queue_seq"),
@@ -813,7 +915,7 @@ class CrawlEngine:
                 "host",
                 "path",
                 F.lit(r + 1).cast("int").alias("arrival_round"),
-            ).cache()
+            ))
             n_discovered = frontier_add.count()
 
         # -- write snapshots (invisible until the manifest commit below);
@@ -877,20 +979,24 @@ class CrawlEngine:
                 "failure_kinds": failure_kinds,
             },
         )
-        # fold the round's finalized keys into the round's bloom generation
-        # (distributed build over the bounded wave, driver-side OR-merge)
-        self.processed_set.add(processed_df, round_id=r)
-
-        selected.unpersist()
-        parsed.unpersist()
-        if frontier_add is not None:
-            frontier_add.unpersist()
-        task_rows.unpersist()
-        self._release_live_fetched()
-        ordering.release_cached()
+        # advance the unprocessed set by this round alone: its finalized
+        # keys leave (wave-bounded anti-join side), its discoveries enter
+        keys = processed_df.select("url_hash", "url")
+        remaining = self._unprocessed.join(
+            F.broadcast(keys) if self.broadcast_wave else keys,
+            ["url_hash", "url"],
+            "left_anti",
+        )
+        if n_discovered:
+            remaining = remaining.unionByName(
+                frontier_add.withColumn("url", F.col("canonical_url"))
+            )
+        self._set_unprocessed(remaining)
         return st
 
-    def _release_live_fetched(self) -> None:
-        if self._live_fetched is not None:
-            self._live_fetched.unpersist()
-            self._live_fetched = None
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop a ``localCheckpoint``'s blocks now instead of at the JVM's
+    next GC: a checkpointed frame's logical plan is the LogicalRDD that
+    holds them."""
+    df._jdf.logicalPlan().rdd().unpersist(False)

@@ -162,6 +162,31 @@ class SnapshotStore:
             )
         return self._read_paths(spark, table, schema, paths)
 
+    def read_round(
+        self,
+        spark: SparkSession,
+        table: str,
+        schema: T.StructType,
+        round_id: int,
+    ) -> DataFrame | None:
+        """Only the snapshot round ``round_id`` committed for ``table`` —
+        one directory, however long the history. None when that round
+        committed no snapshot of ``table``; raises like ``read_as_of``
+        when compaction has folded the snapshot away."""
+        paths = [
+            r["tables"][table]
+            for r in self._manifest["rounds"]
+            if r["round"] == round_id and table in r.get("tables", {})
+        ]
+        if not paths:
+            return None
+        if not all(os.path.exists(p) for p in paths):
+            raise ValueError(
+                f"round {round_id} snapshot of '{table}' was "
+                f"compacted/expired: {paths[:3]}"
+            )
+        return self._read_paths(spark, table, schema, paths)
+
     def rollback(self, round_id: int) -> list[dict]:
         """Atomically rewind the run to the state after round ``round_id``
         committed: later rounds' lineage rows are dropped and every table's
