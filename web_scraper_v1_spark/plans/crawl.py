@@ -556,6 +556,12 @@ class CrawlEngine:
             cached.append(df.cache())
             return cached[-1]
 
+        # a union's partitions are the sum of its inputs': the round's
+        # unions of wave- and pending-bounded frames would otherwise fan
+        # out to dozens of near-empty tasks per stage and files per
+        # snapshot. The pending set itself is held at this width.
+        width = self.spark.sparkContext.defaultParallelism
+
         t0 = time.monotonic()
         checked = apply_robots(pending, robots)
         budget_col = None
@@ -591,7 +597,7 @@ class CrawlEngine:
                 checked.filter(F.col("robots_blocked")).withColumn(
                     "selected", F.lit(False)
                 )
-            )
+            ).coalesce(width)
         )
         selected = selection.filter(F.col("selected")).drop("selected")
         deferred_rows = selection.filter(
@@ -617,7 +623,8 @@ class CrawlEngine:
             # bounds the hit set, so one cheap exchange moves the parse
             # stage off the scan. (The shuffle-join path already has an
             # exchange here; the live-fetch path never scans parquet.)
-            hits = hits.repartition("canonical_url")
+            # One parse task per core: the hit set is wave-bounded.
+            hits = hits.repartition(width, "canonical_url")
         parsed = keep(hits.withColumn(
             "r", extract_receiver_response(F.col("html"))
         ).select(
@@ -731,7 +738,9 @@ class CrawlEngine:
             F.lit(None).cast("long").alias("page_bytes"),
             F.lit(None).cast("string").alias("error_kind"),
         )
-        task_rows = keep(fetched_rows.unionByName(blocked_rows))
+        task_rows = keep(
+            fetched_rows.unionByName(blocked_rows).coalesce(width)
+        )
 
         # -- ONE accounting aggregation per round: outcome counts, attempt
         # and byte sums, per-partition histogram, and the deferred count
